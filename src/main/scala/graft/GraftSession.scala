@@ -53,7 +53,14 @@ object GraftSession {
     val n = if (cores > 0) cores.toString
       else sys.env.getOrElse("SPARK_GRAFT_CPUS",
         Runtime.getRuntime.availableProcessors().toString)
-    val s = builder(appName, Some(s"local[$n]")).config("spark.sql.shuffle.partitions", n).getOrCreate()
+    val s = builder(appName, Some(s"local[$n]"))
+      .config("spark.sql.shuffle.partitions", n)
+      // Above this many paths Spark lists files with a Spark job, one task
+      // per path. In local mode those tasks run on the driver's own cores,
+      // so the "parallel" listing of a few dozen local directories (the
+      // 61-month hot store) only adds a job launch to a serial listing.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -16,8 +16,12 @@ import org.apache.spark.sql.functions._
   *    passes hash-partition identically (sort-merge anti, no broadcast — both
   *    sides are large in the reconciliation use).
   *  - [[count]]: single FULL OUTER self-reconciliation on the key projection
-  *    with presence markers — ONE join (one shuffle per side instead of two)
-  *    for the count-only gate, the hot path of the pipeline.
+  *    with presence markers — ONE join instead of two anti joins — for the
+  *    count-only gate, the hot path of the pipeline. [[counts]] also returns
+  *    the right side's row count from the same plan. Unbucketed, a side
+  *    shuffles for its key aggregation and, when a key is a DOUBLE (the
+  *    join normalises it), again for the join; over stores co-bucketed on a
+  *    key member ([[countsBucketed]]) the plan has no data Exchange at all.
   *
   * NULL keys never match (standard equi-join semantics), mirroring YQL; the
   * reference deliberately keys on NOT NULL columns only. The key includes a
@@ -42,19 +46,36 @@ object ExclusionJoin {
       .unionByName(right.join(left, keys, "left_anti").withColumn(tagCol, lit(rightTag)),
         allowMissingColumns = true)
 
-  /** Count-only reconciliation (`select count(1) from L exclusion join R`):
-    * one aggregated full-outer join over de-duplicated key projections.
+  /** A count-form reconciliation: `mismatched` rows (the exclusion join's
+    * cardinality) and `rightRows`, the right side's row count, both from
+    * the same pass.
+    */
+  final case class Counts(mismatched: Long, rightRows: Long)
+
+  object Counts {
+    /** Reads a count form's 1-row `(n_mismatch, n_right)` frame. */
+    def of(frame: DataFrame): Counts = {
+      val r = frame.head
+      Counts(r.getLong(0), r.getLong(1))
+    }
+  }
+
+  /** Count-only reconciliation (`select count(1) from L exclusion join R`).
     *
     * Note: the reference's semantics are bag semantics over key tuples; the
     * pipeline's keys are unique per row (id is a PK member), so we reconcile
-    * multiplicities too via per-side pre-aggregated counts — catches
-    * duplicate-row corruption, not just missing rows.
+    * multiplicities too via per-side counts — catches duplicate-row
+    * corruption, not just missing rows.
     */
   def count(left: DataFrame, right: DataFrame, keys: Seq[String]): Long =
-    countFrame(left, right, keys).head.getLong(0)
+    counts(left, right, keys).mismatched
 
-  /** The count-reconciliation as a 1-row frame (so callers can inspect the
-    * physical plan or embed it in a larger query).
+  /** [[count]] plus the right side's row count, from the same plan. */
+  def counts(left: DataFrame, right: DataFrame, keys: Seq[String]): Counts =
+    Counts.of(countFrame(left, right, keys))
+
+  /** The count-reconciliation as a 1-row frame `(n_mismatch, n_right)` (so
+    * callers can inspect the physical plan or embed it in a larger query).
     */
   def countFrame(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
@@ -62,9 +83,10 @@ object ExclusionJoin {
     val r = right.groupBy(kc: _*).agg(sum(lit(1L)).as("_rn"))
     val joined = l.join(r, keys, "full_outer")
     // A key tuple contributes |ln - rn| mismatched rows (missing side counts 0).
-    val mism = joined.select(
-      abs(coalesce(col("_ln"), lit(0L)) - coalesce(col("_rn"), lit(0L))).as("_d"))
-    mism.agg(coalesce(sum(col("_d")), lit(0L)).as("n_mismatch"))
+    val rn = coalesce(col("_rn"), lit(0L))
+    val mism = joined.select(abs(coalesce(col("_ln"), lit(0L)) - rn).as("_d"), rn.as("_rn"))
+    mism.agg(coalesce(sum(col("_d")), lit(0L)).as("n_mismatch"),
+      coalesce(sum(col("_rn")), lit(0L)).as("n_right"))
   }
 
   /** Exchange-free reconciliation over CO-BUCKETED stores — the 100 TB
@@ -79,7 +101,12 @@ object ExclusionJoin {
     * unbucketed reconcile; the exchange happened once, at write time.
     */
   def countBucketed(spark: org.apache.spark.sql.SparkSession,
-                    leftTable: String, rightTable: String, keys: Seq[String]): Long = {
+                    leftTable: String, rightTable: String, keys: Seq[String]): Long =
+    countsBucketed(spark, leftTable, rightTable, keys).mismatched
+
+  /** [[countBucketed]] plus the right table's row count, from the same plan. */
+  def countsBucketed(spark: org.apache.spark.sql.SparkSession,
+                     leftTable: String, rightTable: String, keys: Seq[String]): Counts = {
     // Bucketing is on a SUBSET of the reconcile keys (the PK); Spark only
     // accepts subset co-partitioning for a join when this flag is off
     // (default on). Correctness is unaffected either way — the flag only
@@ -95,7 +122,7 @@ object ExclusionJoin {
     // each table — nothing next to rebuilding a session per call.
     gate.catalog.refreshTable(leftTable)
     gate.catalog.refreshTable(rightTable)
-    countFrame(gate.table(leftTable), gate.table(rightTable), keys).head.getLong(0)
+    Counts.of(countFrame(gate.table(leftTable), gate.table(rightTable), keys))
   }
 
   /** The derived gate session, ONE per base session: a fresh

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Yql
 import graft.operators.ExclusionJoin
-import graft.sources.{ColdStore, PaymentsSource, YearBucketedStore}
+import graft.sources.{ColdStore, PaymentsPartition, PaymentsSource, YearBucketedStore}
 
 /** The reference's whole DAG as one Spark driver program (SURVEY.md §2.9,
   * §3.1): per run, move one year of `payments` from the hot store to
@@ -21,12 +21,22 @@ import graft.sources.{ColdStore, PaymentsSource, YearBucketedStore}
   *   → drop source partitions (K3: yq_dag.py:106-122)
   *   → advance watermark (C4: yq_dag.py:124-128)
   *
-  * Crash-safety = the reference's own story, kept deliberately: export is
-  * idempotent (partition overwrite), reconcile is read-only, and the
-  * watermark moves last — a crash anywhere re-runs the same window to the
-  * same end state. A failed reconciliation throws (C3) *before* anything
+  * Crash-safety = the reference's own story: export is idempotent
+  * (partition overwrite), reconcile is read-only, and the watermark moves
+  * last. A crash before the drop re-runs the same window to the same end
+  * state, and a crash after the whole drop but before the advance is
+  * drained by [[runAll]], which advances past a window with no hot
+  * partitions. A crash part-way through the drop is NOT safe: the drop
+  * deletes month by month (the reference's PL/pgSQL loop is one
+  * transactional DDL, yq_dag.py:107-118), and the re-run re-exports only
+  * the surviving months over the year's cold copy, losing the dropped ones
+  * from both tiers. A failed reconciliation throws (C3) *before* anything
   * destructive, exactly like `raise ValueError('Data are not equal!')`
   * (yq_dag.py:28-29).
+  *
+  * Both hot reads of a run go through [[PaymentsSource.scanWindow]], so
+  * they touch only the window's partitions; the exact `payment_date`
+  * filter is still applied on top.
   */
 final class CoolingPipeline(
     val source: PaymentsSource,
@@ -48,7 +58,7 @@ final class CoolingPipeline(
     * partition year. Filter + projection reach the source scan.
     */
   def exportFrame(spark: SparkSession, start: LocalDate, end: LocalDate): DataFrame =
-    windowFilter(source.scan(spark), start, end)
+    windowFilter(source.scanWindow(spark, start, end), start, end)
       .select( // every column re-aliased: JDBC sources may surface
         Yql.unwrap(col("id")).as("id"), // dialect-uppercased names (Derby)
         col("doc_num").as("doc_num"),
@@ -69,19 +79,32 @@ final class CoolingPipeline(
     * [[ExclusionJoin.countBucketed]] — zero data Exchange; the shuffle was
     * paid once, at write time. Any other layout (the reference's live-PG
     * hot store can't be bucket-aligned) takes the shuffle plan, which is
-    * the correct default there.
+    * the correct default there ([[reconcileFrame]]).
     */
   def reconcile(spark: SparkSession, start: LocalDate, end: LocalDate): Long =
+    reconcileCounts(spark, start, end).mismatched
+
+  /** The reconcile's mismatch count and the cold side's row count in the
+    * window, from one pass.
+    */
+  private def reconcileCounts(spark: SparkSession, start: LocalDate,
+                              end: LocalDate): ExclusionJoin.Counts =
     bucketedPair(spark, start, end) match {
       case Some((hotTable, coldTable)) =>
-        ExclusionJoin.countBucketed(spark, hotTable, coldTable, reconcileKeys)
-      case None =>
-        val hot = windowFilter(source.scan(spark), start, end)
-          .select(reconcileKeys.map(col): _*)
-        val coldSide = windowFilter(cold.scan(spark), start, end)
-          .select(reconcileKeys.map(col): _*)
-        ExclusionJoin.count(hot, coldSide, reconcileKeys)
+        ExclusionJoin.countsBucketed(spark, hotTable, coldTable, reconcileKeys)
+      case None => ExclusionJoin.Counts.of(reconcileFrame(spark, start, end))
     }
+
+  /** The unbucketed gate as a 1-row frame `(n_mismatch, n_right)`.
+    * Exposed so specs can assert the plan it executes.
+    */
+  def reconcileFrame(spark: SparkSession, start: LocalDate, end: LocalDate): DataFrame = {
+    val keys = reconcileKeys.map(col)
+    ExclusionJoin.countFrame(
+      windowFilter(source.scanWindow(spark, start, end), start, end).select(keys: _*),
+      windowFilter(cold.scan(spark), start, end).select(keys: _*),
+      reconcileKeys)
+  }
 
   /** The co-bucketed table pair for this window, when the layout supports
     * the exchange-free gate: both stores year-bucketed with the SAME
@@ -99,7 +122,13 @@ final class CoolingPipeline(
     case _ => None
   }
 
-  /** One DAG run. Returns (year, rowsExported, diffCount). */
+  /** One DAG run. Returns (year, rowsExported, diffCount).
+    *
+    * `rowsExported` is the reconcile's cold-side row count over the window,
+    * taken in the same pass as the mismatch count; with the mismatch at 0
+    * it equals the hot rows exported. No job re-counts the cold year after
+    * the drop.
+    */
   def runOnce(spark: SparkSession): (Int, Long, Long) = {
     val start = watermark.value
     val end = watermark.windowEnd
@@ -109,18 +138,18 @@ final class CoolingPipeline(
     cold.exportYear(exportFrame(spark, start, end))
 
     // Q2 reconcile, C2 branch, C3 fail.
-    val diff = reconcile(spark, start, end)
+    val checked = reconcileCounts(spark, start, end)
+    val diff = checked.mismatched
     if (diff != 0L)
       throw new IllegalStateException(
         s"Data are not equal! exclusion-join count for $year = $diff; source partitions retained")
 
     // K3 destructive drop, then C4 watermark advance — in that order.
-    val parts = source.listPartitions(spark, s"payments_y$year")
+    val parts = source.listPartitions(spark, PaymentsPartition.yearPrefix(year))
     source.dropPartitions(spark, parts)
     watermark.advance()
 
-    val exported = cold.scan(spark).where(col("payment_year") === year).count()
-    (year, exported, diff)
+    (year, checked.rightRows, diff)
   }
 
   /** C5: drive runs until the hot store is exhausted — the driver-loop
@@ -129,6 +158,11 @@ final class CoolingPipeline(
     * Trigger.AvailableNow streaming runner. `onRun` fires after each
     * completed year (observability hook; also how CoolingStreamSpec
     * injects a mid-run crash).
+    *
+    * The loop stops only when no hot partition holds dates at or after the
+    * watermark. A window with no hot partitions (its drop finished before
+    * a crash prevented the advance) is skipped by advancing the watermark;
+    * a skip counts against `maxRuns` but returns no run.
     */
   def runAll(spark: SparkSession, maxRuns: Int = 100,
       onRun: ((Int, Long, Long)) => Unit = _ => ()): Seq[(Int, Long, Long)] = {
@@ -136,9 +170,13 @@ final class CoolingPipeline(
     var more = true
     var n = 0
     while (more && n < maxRuns) {
-      val year = watermark.value.getYear
-      if (source.listPartitions(spark, s"payments_y$year").isEmpty) more = false
-      else { val r = runOnce(spark); out += r; onRun(r); n += 1 }
+      val from = watermark.value
+      val pending = source.listPartitions(spark, PaymentsPartition.Prefix)
+        .flatMap(PaymentsPartition.span).filter(_._2.isAfter(from))
+      if (pending.isEmpty) more = false
+      else if (!pending.exists(_._1.isBefore(watermark.windowEnd))) watermark.advance()
+      else { val r = runOnce(spark); out += r; onRun(r) }
+      n += 1
     }
     out.result()
   }
@@ -151,10 +189,13 @@ final class CoolingPipeline(
       .select(col("id"), col("payment_date").as("pdate"), lit("pg").as("src"))
     val coldSide = cold.scan(spark)
       .select(col("id"), col("payment_date").as("pdate"), lit("s3").as("src"))
+    // the result has at most two rows per year: sort it in one task
+    // instead of a range-partitioned orderBy (a sampling job plus a shuffle)
     hot.unionAll(coldSide)
       .groupBy(year(col("pdate")).as("dyear"), col("src"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("dyear", "src")
+      .coalesce(1)
+      .sortWithinPartitions("dyear", "src")
   }
 }
 

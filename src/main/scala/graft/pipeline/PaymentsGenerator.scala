@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.sources.PaymentsPartition
 
 /** Seeded Spark port of the reference's data generator
   * (/root/reference/src/sql/db_init.sql:40-68): one `payments` row per
@@ -53,8 +54,6 @@ object PaymentsGenerator {
     */
   def writeHotStore(spark: SparkSession, base: String, startIso: String, months: Int): Unit =
     payments(spark, startIso, months)
-      .withColumn("pmonth",
-        concat(lit("payments_y"), year(col("payment_date")),
-          lit("m"), lpad(month(col("payment_date")).cast("string"), 2, "0")))
+      .withColumn("pmonth", PaymentsPartition.column(col("payment_date")))
       .write.mode(SaveMode.Overwrite).partitionBy("pmonth").parquet(base)
 }

@@ -1,7 +1,10 @@
 package graft.sources
 
+import java.time.{LocalDate, YearMonth}
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{concat, lit, lpad, month, year}
 
 /** The hot-store side of the cooling pipeline (SURVEY.md §1.3): the
   * reference reads `payments` from a range-partitioned PostgreSQL table via
@@ -16,6 +19,16 @@ trait PaymentsSource {
 
   /** Full `payments` relation. Window predicates pushed by Catalyst. */
   def scan(spark: SparkSession): DataFrame
+
+  /** The relation restricted to the partitions that overlap
+    * `[start, end)` — the hot scan of one cooling window, like PG's
+    * partition pruning of the reference's `payment_date` window over its
+    * monthly child tables (db_init.sql:57-59). Rows outside the window may
+    * remain; callers still apply the exact `payment_date` filter. Default:
+    * the full [[scan]], for sources whose own engine prunes on the pushed
+    * predicate (the flat JDBC table on PG).
+    */
+  def scanWindow(spark: SparkSession, start: LocalDate, end: LocalDate): DataFrame = scan(spark)
 
   /** S4: partition names with the given prefix (e.g. `payments_y2020`). */
   def listPartitions(spark: SparkSession, prefix: String): Seq[String]
@@ -139,15 +152,21 @@ final class JdbcPartitionedPaymentsSource(
     p
   }
 
-  override def scan(spark: SparkSession): DataFrame = {
-    val parts = listPartitions(spark, "payments_y")
+  override def scan(spark: SparkSession): DataFrame =
+    union(spark, listPartitions(spark, PaymentsPartition.Prefix))
+
+  /** Only the month tables inside the window: at most 13 JDBC reads. */
+  override def scanWindow(spark: SparkSession, start: LocalDate, end: LocalDate): DataFrame =
+    union(spark, PaymentsPartition.overlapping(
+      listPartitions(spark, PaymentsPartition.Prefix), start, end))
+
+  private def union(spark: SparkSession, parts: Seq[String]): DataFrame =
     if (parts.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         // child tables carry the payments schema; reuse the parquet twin's
         new ParquetPaymentsSource("/nonexistent").schema)
     else
       parts.map(t => spark.read.jdbc(url, t, props)).reduce(_ unionByName _)
-  }
 
   override def listPartitions(spark: SparkSession, prefix: String): Seq[String] =
     flat.listPartitions(spark, prefix)
@@ -183,13 +202,27 @@ final class ParquetPaymentsSource(base: String) extends PaymentsSource {
 
   override def scan(spark: SparkSession): DataFrame =
     if (FsUtil.listDir(spark, base).exists(_.startsWith("pmonth=")))
-      spark.read
-        .schema(schema.add("pmonth", org.apache.spark.sql.types.StringType))
-        .option("basePath", base)
-        .parquet(s"$base/pmonth=*")
-        .drop("pmonth")
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      read(spark, Seq(s"$base/pmonth=*"))
+    else empty(spark)
+
+  /** Only the window's `pmonth=` directories, as explicit paths: a year
+    * window names at most 13 of them, so Spark lists them on the driver
+    * instead of launching a listing job, and the scan reads no other month.
+    */
+  override def scanWindow(spark: SparkSession, start: LocalDate, end: LocalDate): DataFrame = {
+    val parts = PaymentsPartition.overlapping(listPartitions(spark, PaymentsPartition.Prefix), start, end)
+    if (parts.isEmpty) empty(spark) else read(spark, parts.map(n => s"$base/pmonth=$n"))
+  }
+
+  private def read(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read
+      .schema(schema.add("pmonth", org.apache.spark.sql.types.StringType))
+      .option("basePath", base)
+      .parquet(paths: _*)
+      .drop("pmonth")
+
+  private def empty(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   override def listPartitions(spark: SparkSession, prefix: String): Seq[String] =
     FsUtil.listDir(spark, base)
@@ -199,6 +232,40 @@ final class ParquetPaymentsSource(base: String) extends PaymentsSource {
 
   override def dropPartitions(spark: SparkSession, names: Seq[String]): Unit =
     names.foreach(n => FsUtil.delete(spark, s"$base/pmonth=$n"))
+}
+
+/** The reference's partition naming (db_init.sql:57-59): `payments_yYYYYmMM`
+  * for a month; the year-bucketed stores name a whole year `payments_yYYYY`.
+  * Names are matched case-insensitively, because some JDBC catalogs (Derby)
+  * report table names in upper case.
+  */
+object PaymentsPartition {
+  val Prefix = "payments_y"
+
+  private val MonthName = """(?i)payments_y(\d{4})m(0[1-9]|1[0-2])""".r
+  private val YearName = """(?i)payments_y(\d{4})""".r
+
+  /** Each row's month partition name, from its timestamp column. */
+  def column(ts: Column): Column =
+    concat(lit(Prefix), year(ts), lit("m"), lpad(month(ts).cast("string"), 2, "0"))
+
+  /** Listing prefix of one year's partitions. */
+  def yearPrefix(y: Int): String = s"$Prefix$y"
+
+  /** The dates `[from, until)` a partition holds; None for other names. */
+  def span(name: String): Option[(LocalDate, LocalDate)] = name match {
+    case MonthName(y, m) =>
+      val from = YearMonth.of(y.toInt, m.toInt).atDay(1)
+      Some((from, from.plusMonths(1)))
+    case YearName(y) =>
+      val from = LocalDate.of(y.toInt, 1, 1)
+      Some((from, from.plusYears(1)))
+    case _ => None
+  }
+
+  /** The names whose dates overlap `[start, end)`. */
+  def overlapping(names: Seq[String], start: LocalDate, end: LocalDate): Seq[String] =
+    names.filter(n => span(n).exists { case (from, until) => from.isBefore(end) && until.isAfter(start) })
 }
 
 /** Hadoop-FS helpers: the Spark mapping of the reference's S3 key listing

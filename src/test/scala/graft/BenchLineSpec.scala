@@ -53,11 +53,18 @@ class BenchLineSpec extends AnyFunSuite {
     val res = fakeResults.take(5)
     val full = Bench.fullLine(res, Nil, "sf")
     val compact = Bench.compactLine(res, Nil, "sf")
-    def vals(s: String): Seq[Double] =
-      """:(\d+\.\d+)[,}]""".r.findAllMatchIn(s.dropWhile(_ != '{').drop(1))
-        .map(_.group(1).toDouble).toSeq
-    vals(full).zip(vals(compact)).foreach { case (f, c) =>
-      assert(math.abs(f - c) <= 0.001, s"$f vs $c")
+    // key -> value of every number, the total included ("value")
+    def vals(s: String): Map[String, Double] =
+      """"([^"]+)":(\d+\.\d+)""".r.findAllMatchIn(s)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    // the compact line keys each query by its survey id, unless two share one
+    val shortOf = res.map(_._1).groupBy(_.takeWhile(_ != '_'))
+      .flatMap { case (short, grp) => grp.map(k => k -> (if (grp.size == 1) short else k)) } +
+      ("value" -> "value")
+    val (f, c) = (vals(full), vals(compact))
+    assert(f.keySet == shortOf.keySet && c.keySet == shortOf.values.toSet, s"$f vs $c")
+    f.foreach { case (k, v) =>
+      assert(math.abs(v - c(shortOf(k))) <= 0.001, s"$k: $v vs ${c(shortOf(k))}")
     }
   }
 }

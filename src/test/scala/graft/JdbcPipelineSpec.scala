@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.DriverManager
 import java.time.LocalDate
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,6 +61,26 @@ class JdbcPipelineSpec extends AnyFunSuite {
     val source = new JdbcPartitionedPaymentsSource(url,
       prefix => s"SELECT tablename FROM SYS.SYSTABLES WHERE tablename LIKE '${prefix.toUpperCase}%'")
     new CoolingPipeline(source, new ColdStore(s"$root/cold"), wm)
+  }
+
+  /** The JDBC tables a frame's physical plan reads, lower-cased (Derby
+    * reports catalog names in upper case).
+    */
+  private def tablesRead(df: DataFrame): Set[String] =
+    """JDBCRelation\((\w+)\)""".r.findAllMatchIn(df.queryExecution.sparkPlan.toString)
+      .map(_.group(1).toLowerCase).toSet
+
+  test("window-scoped hot scans read only the window's month tables") {
+    val p = pipeline
+    val s = LocalDate.parse("2020-01-01"); val e = LocalDate.parse("2021-01-01")
+    val months2020 = (1 to 12).map(m => f"payments_y2020m$m%02d").toSet
+    val export = p.exportFrame(spark, s, e)
+    assert(tablesRead(export) == months2020) // not payments_y2021m01
+    p.cold.exportYear(export)
+    val gate = p.reconcileFrame(spark, s, e)
+    assert(tablesRead(gate) == months2020)
+    val r = gate.head
+    assert((r.getLong(0), r.getLong(1)) == (0L, 12L * RowsPerMonth))
   }
 
   test("cooling run against live JDBC: export, reconcile 0, drop real tables, advance") {

@@ -101,4 +101,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(withSubSecond == 0L)
     assert(p.cold.schema("id").nullable == false)
   }
+
+  test("runAll drains after a crash between the drop and the watermark advance") {
+    val r = Files.createTempDirectory("graft-pipeline-stall").toString
+    PaymentsGenerator.writeHotStore(spark, s"$r/hot", "2020-12-01", months = 2) // 2020-12, 2021-01
+    val wm = new Watermark(s"$r/wm.json")
+    val s = LocalDate.parse("2020-01-01"); val e = LocalDate.parse("2021-01-01")
+    wm.initIfAbsent(s)
+    val p = new CoolingPipeline(new ParquetPaymentsSource(s"$r/hot"), new ColdStore(s"$r/cold"), wm)
+    // the crashed run: 2020 exported, reconciled and dropped; the watermark
+    // never advanced
+    p.cold.exportYear(p.exportFrame(spark, s, e))
+    assert(p.reconcile(spark, s, e) == 0L)
+    p.source.dropPartitions(spark, p.source.listPartitions(spark, "payments_y2020"))
+    // the restart advances past the drained 2020 window and cools 2021
+    assert(p.runAll(spark) == Seq((2021, 44640L, 0L)))
+    assert(wm.value == LocalDate.parse("2022-01-01"))
+    assert(p.source.listPartitions(spark, "payments_y").isEmpty)
+    val perYear = p.cold.scan(spark).groupBy("payment_year").count().collect()
+      .map(x => x.getInt(0) -> x.getLong(1)).toMap
+    assert(perYear == Map(2020 -> 44640L, 2021 -> 44640L))
+  }
 }

@@ -105,20 +105,23 @@ object ExclusionJoinProps extends Properties("graft") {
     forAll(relGen, relGen) { (l0, r0) =>
       val spark = sc_
       import spark.implicits._
-      // distinct non-null rows: both formulations must agree
-      val l = l0.collect { case (Some(k), Some(v)) => (k, v) }.distinct
-      val r = r0.collect { case (Some(k), Some(v)) => (k, v) }.distinct
+      // distinct rows, NULL keys kept: both formulations must agree (a
+      // NULL-keyed row never matches, on either side), and the count form
+      // also returns the right side's row count
+      val l = l0.distinct
+      val r = r0.distinct
       val ldf = l.toDF("k", "v"); val rdf = r.toDF("k", "v")
       val rowForm = ExclusionJoin(ldf, rdf, Seq("k", "v")).count()
-      val countForm = ExclusionJoin.count(ldf, rdf, Seq("k", "v"))
-      rowForm == countForm && {
-        // with a duplicated left row, the count form flags the drift the
-        // anti-join row form cannot see (documented ExclusionJoin contract)
-        if (l.isEmpty || !r.contains(l.head)) true
-        else {
-          val dup = (l :+ l.head).toDF("k", "v")
-          ExclusionJoin(dup, rdf, Seq("k", "v")).count() == rowForm &&
-            ExclusionJoin.count(dup, rdf, Seq("k", "v")) == countForm + 1
+      val counts = ExclusionJoin.counts(ldf, rdf, Seq("k", "v"))
+      rowForm == counts.mismatched && counts.rightRows == r.size.toLong && {
+        // with a duplicated matched left row, the count form flags the drift
+        // the anti-join row form cannot see (documented ExclusionJoin contract)
+        l.find(x => x._1.isDefined && x._2.isDefined && r.contains(x)) match {
+          case None => true
+          case Some(x) =>
+            val dup = (l :+ x).toDF("k", "v")
+            ExclusionJoin(dup, rdf, Seq("k", "v")).count() == rowForm &&
+              ExclusionJoin.count(dup, rdf, Seq("k", "v")) == counts.mismatched + 1
         }
       }
     }
