@@ -64,6 +64,11 @@ object Bench {
     s"""{"metric":"total","value":${s3(ok.map(_._2).sum)},"unit":"sec","queries":$qsShort,"failed":$failedJson,"sf":"$sfDir"}"""
   }
 
+  /** Failures go to stderr, never stdout: stdout carries only the two
+    * JSON lines the driver parses. */
+  private def warnFailed(what: String, t: Throwable): Unit =
+    System.err.println(s"[bench] $what FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_BENCH_ONLY=d7_dup_clusters,d3_minhash_lsh — iterate on one
@@ -81,25 +86,25 @@ object Bench {
     val spark = GraftSession.prepare(GraftSession.local("graft-bench"))
 
     val warmDir = "/root/testdata/sf0.001"
-    selected.foreach { case (_, fn) =>
-      try fn(spark, warmDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, warmDir).queryExecution.toRdd.count() catch { case t: Throwable => warnFailed(s"warmup $name", t) }
     }
-    // drop warmup-scale cached intermediates before measuring: they'd
-    // hold executor memory for the whole measured pass otherwise
-    queries.DedupQueries.unpersistShared()
+    // drop warmup-scale intermediates before measuring: they'd hold
+    // executor memory for the whole measured pass otherwise
+    Materialize.releaseAll()
 
     // Min of 3 repetitions per query: the host shows heavy run-to-run
     // variance (co-tenant load), and the minimum is the standard estimator
     // of steady-state engine cost under external noise. A query that throws
     // is reported in "failed" rather than recorded as a near-zero timing
     // (ADVICE r1: silent catch made breakage look like a speedup).
-    // Release tracked caches at every FAMILY boundary: releasing only at
-    // battery start/end let all 182 queries' tracked(...cache()) relations
-    // accumulate across the measured pass, and once residency crossed the
-    // eviction threshold the biggest cache consumer (v10) thrashed —
-    // recorded 10.97 s vs 3.28 s in an isolated JVM (r12 verdict #1).
-    // A family = the owning query MODULE (the unit that shares tracked
-    // caches), looked up via SparkEntry.moduleOf — not parsed from the
+    // Release materialized intermediates at every FAMILY boundary:
+    // releasing only at battery start/end let all 182 queries' cached
+    // relations accumulate across the measured pass, and once residency
+    // crossed the eviction threshold the biggest cache consumer (v10)
+    // thrashed — recorded 10.97 s vs 3.28 s in an isolated JVM (r12
+    // verdict #1). A family = the owning query MODULE (the unit that
+    // shares caches), looked up via SparkEntry.moduleOf — not parsed from the
     // name prefix. Sorting by (module, name) keeps families contiguous by
     // construction. Cross-family sharing just re-persists on next use
     // (min-of-3 absorbs the rebuild in run 1, same as a cold family start).
@@ -108,15 +113,15 @@ object Bench {
       .sortBy { case (name, _) => (SparkEntry.moduleOf(name), name) }
       .map { case (name, fn) =>
       val family = SparkEntry.moduleOf(name)
-      if (prevFamily != -1 && family != prevFamily) queries.DedupQueries.unpersistShared()
+      if (prevFamily != -1 && family != prevFamily) Materialize.releaseAll()
       if (family != prevFamily)
         // pre-build the family's SHARED caches outside any timed rep: the
         // cold build landing inside the first sharer's min-of-3 let one
         // co-tenant spike inflate every sharer's headline number at once
-        // (v10/v12 adjudications in r12/r14/r15). Failures surface in the
-        // query's own timed run, not here.
+        // (v10/v12 adjudications in r12/r14/r15). A failure is logged and
+        // surfaces again in the query's own timed run.
         SparkEntry.modulePrewarm.get(family).foreach { pw =>
-          try pw(spark, sfDir) catch { case _: Throwable => () }
+          try pw(spark, sfDir) catch { case t: Throwable => warnFailed(s"warmup prewarm:$name", t) }
         }
       prevFamily = family
       val reps = if (DeterministicHeavy(name)) 2 else 3
@@ -129,9 +134,7 @@ object Bench {
         // the scans — projection-shaped queries (t1-t7, d15/d16's
         // id-restore tail) were being timed as bare parquet scan-counts
         val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true } catch {
-          case t: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
-            false
+          case t: Throwable => warnFailed(name, t); false
         }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
@@ -143,7 +146,7 @@ object Bench {
       System.err.println(s"[bench] $name ${best.map(s4).getOrElse("FAILED")}")
       (name, best)
     }
-    queries.DedupQueries.unpersistShared()
+    Materialize.releaseAll()
     val ok = results.collect { case (k, Some(v)) => k -> v }
     val failed = results.collect { case (k, None) => k }
     // 4-decimal (0.1 ms) timings: full-double rendering made the 104-query

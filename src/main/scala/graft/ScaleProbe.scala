@@ -198,7 +198,7 @@ object ScaleProbe {
       // drop d-family shared caches BETWEEN reps too: min-of-reps must
       // measure the cold query, not rep2 reading rep1's persisted
       // intermediates (which understated d4/d5 by >10x in the first run)
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       val attempt = Future {
         spark.sparkContext.setJobGroup(s"probe-$name", name, interruptOnCancel = true)
         try fn(spark, dir).queryExecution.toRdd.count() finally spark.sparkContext.clearJobGroup()
@@ -224,8 +224,8 @@ object ScaleProbe {
     * cluster sizes, so a dup-dense corpus explodes it quadratically.
     */
   private def pairStats(spark: SparkSession, dir: String): Unit = {
-    val e = queries.DedupQueries.d5SimhashPairs(spark, dir)
-      .select(col("da").as("a"), col("db").as("b")).persist()
+    val e = Materialize.cache(queries.DedupQueries.d5SimhashPairs(spark, dir)
+      .select(col("da").as("a"), col("db").as("b")))
     val edges = e.count()
     val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -235,8 +235,7 @@ object ScaleProbe {
     val top = deg.orderBy(col("deg").desc).limit(5).collect()
       .map(r => s"${r.get(0)}:${r.get(1)}").mkString(", ")
     println(s"[pairstats] dir=$dir edges=$edges wedges=$wedges topDeg=[$top]")
-    e.unpersist()
-    queries.DedupQueries.unpersistShared()
+    Materialize.releaseAll()
   }
 
   /** `--bpedepth [baseDir] [factor] [outDir]`: BPE merge-loop depth probe.
@@ -357,13 +356,12 @@ object ScaleProbe {
     val emb = Tables.embeddings(spark, outDir)
     val cells = 64
     val (idx, tBuild) = tick(IvfIndex.build(spark, emb, ivfBase, cells = cells, lloydIters = 2))
-    val hotSrc = spark.read.parquet(s"$ivfBase/assignments").where(col("cid") === 0)
-      .select(col("vec_id"), col("v")).localCheckpoint(true)
+    val hotSrc = Materialize.checkpoint(spark.read.parquet(s"$ivfBase/assignments")
+      .where(col("cid") === 0).select(col("vec_id"), col("v")))
     val reps = spark.range(1, 6).select(col("id").as("r"))
-    val inc = hotSrc.crossJoin(reps)
+    val inc = Materialize.checkpoint(hotSrc.crossJoin(reps)
       .select((col("vec_id") + col("r") * 1000000000L).as("vec_id"),
-        transform(col("v"), x => x + col("r").cast("double") / 1000.0).as("embedding"))
-      .localCheckpoint(true)
+        transform(col("v"), x => x + col("r").cast("double") / 1000.0).as("embedding")))
     val (_, tAppend) = tick(idx.append(spark, inc))
     def listStats(base: String): (Long, Double, Long) = {
       val s = spark.read.parquet(s"$base/assignments").groupBy("cid").count()
@@ -493,13 +491,12 @@ object ScaleProbe {
     // hash-derived uniforms — reproducible across runs.
     val u = pmod(hash(col("id")), lit(1000000L)).cast("double") / 1e6
     val tailNodes = math.max(1L, nEdges / 8)
-    val edges = spark.range(nEdges).select(
+    val edges = Materialize.checkpoint(spark.range(nEdges).select(
       when(pmod(hash(col("id"), lit(7)), lit(10)) < 9,
         pow(lit(hubs.toDouble), u).cast("long"))
         .otherwise(lit(hubs.toLong) + pmod(hash(col("id"), lit(13)), lit(tailNodes)))
         .as("src"),
-      pmod(hash(col("id"), lit(99)), lit(nEdges / 4)).as("dst"))
-      .localCheckpoint(true)
+      pmod(hash(col("id"), lit(99)), lit(nEdges / 4)).as("dst")))
     // model the at-scale regime on a laptop-sized probe: (a) the rank side
     // is corpus-node-sized and must NOT broadcast (at 100 TB it wouldn't);
     // (b) AQE's 256 MB skew threshold assumes cluster-sized partitions —
@@ -528,11 +525,10 @@ object ScaleProbe {
     //  - crawl-order: round-robin repartitioned, the layout edges have
     //    when they arrive from ingestion — the hot key's bytes spread
     //    over every mapper and AQE can split.
-    val edgeDegClustered = edges.join(deg, "src").localCheckpoint(true)
-    val edgeDegCrawl = edges.join(deg, "src")
-      .repartition(spark.sparkContext.defaultParallelism).localCheckpoint(true)
-    val rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-      .localCheckpoint(true)
+    val edgeDegClustered = Materialize.checkpoint(edges.join(deg, "src"))
+    val edgeDegCrawl = Materialize.checkpoint(edges.join(deg, "src")
+      .repartition(spark.sparkContext.defaultParallelism))
+    val rank = Materialize.checkpoint(deg.select(col("src").as("node"), lit(1000000L).as("r")))
     val topDeg = deg.orderBy(col("deg").desc).limit(3).collect()
       .map(r => s"${r.getLong(0)}:${r.getLong(1)}").mkString(", ")
 
@@ -653,7 +649,7 @@ object ScaleProbe {
       ("m8_crossmodal_dedup", "uni", uniDir), ("m8_crossmodal_dedup", "hot", hotDir))
     val results = cells.map { case (q, tag, dir) =>
       val r = time(spark, dir, s"$q@$tag", SparkEntry.queries(q), reps = 2)
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       System.err.println(f"[dfskew] $q%-20s $tag%-5s ${r.map(_._1).getOrElse(Double.NaN)}%8.2fs rows=${r.map(_._2).getOrElse(-1L)}")
       (q, tag, r)
     }
@@ -770,14 +766,14 @@ object ScaleProbe {
     val results = probes.map { q =>
       val fn = SparkEntry.queries(q)
       val status = classifyConstruction { fn(spark, outDir); () }
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       val cell = status match {
         case Left((st, msg)) =>
           System.err.println(s"[$tag] $q ${st.toUpperCase}: $msg")
           s""""$q":{"status":"$st","detail":"${msg.replace("\"", "'")}"}"""
         case Right(()) =>
           val r = time(spark, outDir, q, fn, reps = 2)
-          queries.DedupQueries.unpersistShared()
+          Materialize.releaseAll()
           System.err.println(f"[$tag] $q%-22s ${r.map(_._1).getOrElse(Double.NaN)}%8.2fs rows=${r.map(_._2).getOrElse(-1L)}")
           r match {
             case Some((sec, rows)) => s""""$q":{"status":"ok","sec":$sec,"rows":$rows}"""
@@ -889,9 +885,9 @@ object ScaleProbe {
     val rows = probeList.map { name =>
       val fn = SparkEntry.queries(name)
       val base = time(spark, baseDir, name, fn, reps = 2)
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       val long = time(spark, outDir, name, fn, reps = 2)
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       println(f"[doclen] $name%-22s base=${base.map(_._1).getOrElse(Double.NaN)}%7.2fs " +
         f"len$lenFactor=${long.map(_._1).getOrElse(Double.NaN)}%7.2fs " +
         f"ratio=${(for (b <- base; l <- long) yield l._1 / b._1).getOrElse(Double.NaN)}%6.2f")
@@ -993,16 +989,19 @@ object ScaleProbe {
       .filter { case (name, _) => Families.contains(name.head) && !Skip(name) }
 
     // JIT/codegen warmup at the smallest SF so base timings are steady-state
-    probed.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count() catch { case _: Throwable => () }
+    probed.foreach { case (name, fn) =>
+      try fn(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count() catch {
+        case t: Throwable =>
+          System.err.println(s"[probe] warmup $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
+      }
     }
-    queries.DedupQueries.unpersistShared()
+    Materialize.releaseAll()
 
     val rows = probed.map { case (name, fn) =>
       val base = time(spark, baseDir, name, fn, reps = 2)
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       val scaled = time(spark, outDir, name, fn, reps = 2)
-      queries.DedupQueries.unpersistShared()
+      Materialize.releaseAll()
       println(f"[probe] $name%-22s base=${base.map(_._1).getOrElse(Double.NaN)}%7.2fs " +
         f"x$factor=${scaled.map(_._1).getOrElse(Double.NaN)}%7.2fs " +
         f"ratio=${(for (b <- base; s <- scaled) yield s._1 / b._1).getOrElse(Double.NaN)}%6.2f " +

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.Text
 import graft.sources.Tables
 
@@ -451,10 +452,9 @@ object Bpe {
     // tokenization and would fuse into the next symbol, diverging from
     // the oracle's string_split(w, '') in the multilingual regime this
     // uncapped path exists for.
-    var cur = types
+    var cur = Materialize.checkpoint(types
       .select(col("cnt"),
-        regexp_replace(col("w"), "(?s)(.)", S + "$1" + E).as("sym"))
-      .localCheckpoint()
+        regexp_replace(col("w"), "(?s)(.)", S + "$1" + E).as("sym")))
     var pinned = cur // the checkpoint whose blocks we currently own
     val merges = mutable.ArrayBuffer.empty[(String, String, Long)]
     val roundSecs = mutable.ArrayBuffer.empty[Double]
@@ -483,33 +483,15 @@ object Bpe {
             replace(col("sym"), lit(S + a + E + S + b + E), lit(S + a + b + E)))
           r += 1
           if (r % DistCheckpointEvery == 0 && r < rounds) {
-            val ck = cur.localCheckpoint()
-            freeCheckpoint(pinned)
+            val ck = Materialize.checkpoint(cur)
+            Materialize.free(pinned)
             pinned = ck; cur = ck
           }
           roundSecs += (System.nanoTime() - t0) / 1e9
         }
       }
-    } finally freeCheckpoint(pinned)
+    } finally Materialize.free(pinned)
     (merges.toSeq, roundSecs.toSeq)
-  }
-
-  /** Release a localCheckpoint's executor blocks (same contract and
-    * warning as TextQueries.freeLocalCheckpoint: `df.unpersist()` is a
-    * CacheManager no-op for checkpoints — the blocks live in the
-    * LogicalRDD leaf).
-    */
-  private def freeCheckpoint(df: DataFrame): Unit = {
-    var freed = 0
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true); freed += 1
-      case _ => ()
-    }
-    if (freed == 0)
-      System.err.println(
-        "WARN graft: Bpe.freeCheckpoint found no LogicalRDD leaf to unpersist — " +
-          "checkpoint blocks stay resident (plan: " + df.queryExecution.analyzed.nodeName + ")")
   }
 
   /** Byte-level oracle CTEs: pretokenize with the SAME regex, hex-pair

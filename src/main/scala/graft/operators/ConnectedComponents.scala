@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed connected components by min-label propagation — the cluster
   * step of near-duplicate deduplication: LSH/SimHash emit *pairs*; turning
   * pairs into duplicate *groups* (keep one survivor per group) is a
@@ -30,15 +32,13 @@ object ConnectedComponents {
     */
   def apply(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val e = edges.toDF("a", "b")
-    val und = e.union(e.select(col("b"), col("a")))
-      .toDF("src", "dst").distinct()
-      .localCheckpoint(true)
+    val und = Materialize.checkpoint(e.union(e.select(col("b"), col("a")))
+      .toDF("src", "dst").distinct())
 
     // seed with min(self, neighbors) — the first propagation round folded
     // into initialization (one aggregation instead of join+agg)
-    var labels = und.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
-      .localCheckpoint(true)
+    var labels = Materialize.checkpoint(und.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+      .select(col("src").as("id"), least(col("src"), col("mn")).as("comp")))
 
     // Convergence via the label sum: labels are per-node non-increasing, so
     // the sum strictly decreases every round that changes anything — an
@@ -53,9 +53,8 @@ object ConnectedComponents {
     while (!converged && iter < maxIter) {
       val msgs = und.join(labels, und("src") === labels("id"))
         .select(col("dst").as("id"), col("comp"))
-      labels = labels.select("id", "comp").union(msgs)
-        .groupBy("id").agg(min("comp").as("comp"))
-        .localCheckpoint(true)
+      labels = Materialize.checkpoint(labels.select("id", "comp").union(msgs)
+        .groupBy("id").agg(min("comp").as("comp")))
       val s = labelSum(labels)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -147,19 +146,18 @@ object ConnectedComponents {
     // for nodes, once for the normalized contraction input. nodes itself
     // no longer needs its own eager checkpoint: it re-derives from e0 with
     // one cheap explode+distinct at the final join.
-    val e0 = edges.toDF("a", "b").localCheckpoint(true)
+    val e0 = Materialize.checkpoint(edges.toDF("a", "b"))
     val nodes = e0
       .select(explode(array(col("a"), col("b"))).as("id")).distinct()
     // normalized edge list; self-loops dropped (their nodes are restored
     // as singleton components at the end). The distinct shuffle is AQE-
     // coalesced, so the contraction that follows sees few, dense
     // partitions at gate scale.
-    var e = contractPartitions(
+    var e = Materialize.checkpoint(contractPartitions(
       e0
         .where(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct())
-      .localCheckpoint(true)
+        .distinct()))
 
     var iter = 0
     var converged = isStarForest(e)
@@ -180,13 +178,12 @@ object ConnectedComponents {
       val withMin2 = nbrs2
         .withColumn("m", min(col("v"))
           .over(org.apache.spark.sql.expressions.Window.partitionBy("u")))
-      val small = withMin2
+      val small = Materialize.checkpoint(withMin2
         .select(col("m").as("a"), col("v").as("b"))
         .union(withMin2.select(col("m").as("a"), col("u").as("b")))
         .where(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
 
       e = small
       converged = isStarForest(e)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.Vectors
 
 /** Persistent IVF (inverted-file) ANN index — the production form of the
@@ -173,41 +174,42 @@ final class IvfIndex private (val base: String) {
     val maxCid = sizes.map(_._1).max
     val nNew = hot.map { case (_, n) => math.max(2, math.ceil(n / mean).toInt) }.sum
 
-    // partition-pruned read of exactly the hot lists
-    val vecs = assignments(spark)
-      .where(col("cid").isin(hotIds.map(Integer.valueOf): _*))
-      .select("vec_id", "v", "n2")
-      .localCheckpoint() // the delete below must not re-trigger this scan
-    var cents = vecs
-      .withColumn("h", md5(concat(lit("ivf:rc:"), col("vec_id").cast("string"))))
-      .orderBy("h").limit(nNew)
-      .withColumn("cid", (row_number().over(
-        Window.partitionBy(substring(col("h"), 1, 0)).orderBy("h")) + maxCid).cast("int"))
-      .select(col("cid"), col("v").as("cv"), col("n2").as("cn2"))
-      .localCheckpoint()
-    (1 to lloydIters).foreach { _ =>
-      cents = IvfIndex.lloydStep(cents, vecs).localCheckpoint()
-    }
+    val hasPq = IvfIndex.withCheckpoints { checkpoint =>
+      // partition-pruned read of exactly the hot lists; checkpointed so the
+      // delete below cannot re-trigger this scan
+      val vecs = checkpoint(assignments(spark)
+        .where(col("cid").isin(hotIds.map(Integer.valueOf): _*))
+        .select("vec_id", "v", "n2"))
+      var cents = checkpoint(vecs
+        .withColumn("h", md5(concat(lit("ivf:rc:"), col("vec_id").cast("string"))))
+        .orderBy("h").limit(nNew)
+        .withColumn("cid", (row_number().over(
+          Window.partitionBy(substring(col("h"), 1, 0)).orderBy("h")) + maxCid).cast("int"))
+        .select(col("cid"), col("v").as("cv"), col("n2").as("cn2")))
+      (1 to lloydIters).foreach { _ =>
+        cents = checkpoint(IvfIndex.lloydStep(cents, vecs))
+      }
 
-    // cold centroids verbatim + new sub-cells; materialize before the
-    // overwrite below reads-while-writing the same path
-    val newCentroids = centroids(spark)
-      .where(!col("cid").isin(hotIds.map(Integer.valueOf): _*))
-      .unionByName(cents)
-      .localCheckpoint()
+      // cold centroids verbatim + new sub-cells; materialize before the
+      // overwrite below reads-while-writing the same path
+      val newCentroids = checkpoint(centroids(spark)
+        .where(!col("cid").isin(hotIds.map(Integer.valueOf): _*))
+        .unionByName(cents))
 
-    val reassigned = IvfIndex.assignTo(cents, vecs).localCheckpoint()
-    reassigned.write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/assignments")
-    val hasPq = graft.sources.FsUtil.listDir(spark, base).contains("codebooks")
-    if (hasPq) {
-      val cb = IvfIndex.readCodebooks(spark, base)
-      reassigned.select(col("vec_id"),
-          call_function("graft_pq_encode", IvfIndex.unitQ,
-            typedLit(cb.map(_._1).flatMap(_.flatMap(_.toSeq)).toSeq), lit(cb.length)).as("codes"),
-          col("cid"))
-        .write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/codes")
+      val reassigned = checkpoint(IvfIndex.assignTo(cents, vecs))
+      reassigned.write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/assignments")
+      val hasPq = graft.sources.FsUtil.listDir(spark, base).contains("codebooks")
+      if (hasPq) {
+        val cb = IvfIndex.readCodebooks(spark, base)
+        reassigned.select(col("vec_id"),
+            call_function("graft_pq_encode", IvfIndex.unitQ,
+              typedLit(cb.map(_._1).flatMap(_.flatMap(_.toSeq)).toSeq), lit(cb.length)).as("codes"),
+            col("cid"))
+          .write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/codes")
+      }
+      newCentroids.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
+      hasPq
     }
-    newCentroids.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
     hotIds.foreach { id =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$base/assignments/cid=$id"), true)
       if (hasPq) fs.delete(new org.apache.hadoop.fs.Path(s"$base/codes/cid=$id"), true)
@@ -305,12 +307,6 @@ final class IvfIndex private (val base: String) {
 
 object IvfIndex {
 
-  /** Bounded pool for parallel parquet-footer metadata reads (recenter's
-    * hot-cell detection) — footers are immutable, so concurrent opens are
-    * safe, and 16-way keeps a thousands-of-files index's detection pass
-    * I/O-bound instead of latency-bound. Lazy: a JVM that never calls
-    * recenter never creates the pool's threads.
-    */
   /** Two-thread pool for overlapping a build's independent write actions
     * (guide §2.6) — concurrent jobs from one SparkSession are supported;
     * descriptions/groups are thread-local so UI labels stay correct.
@@ -327,6 +323,12 @@ object IvfIndex {
           t
         }))
 
+  /** Bounded pool for parallel parquet-footer metadata reads (recenter's
+    * hot-cell detection) — footers are immutable, so concurrent opens are
+    * safe, and 16-way keeps a thousands-of-files index's detection pass
+    * I/O-bound instead of latency-bound. Lazy: a JVM that never calls
+    * recenter never creates the pool's threads.
+    */
   private[operators] lazy val FooterPool =
     new scala.collection.parallel.ForkJoinTaskSupport(
       new java.util.concurrent.ForkJoinPool(16))
@@ -361,25 +363,23 @@ object IvfIndex {
         nullable = true),
       org.apache.spark.sql.types.StructField("cn2",
         org.apache.spark.sql.types.DoubleType, nullable = true)))
-    var cents = spark.createDataFrame(
+    val seed = spark.createDataFrame(
       java.util.Arrays.asList(seedRows.sortBy(_.getString(0)).zipWithIndex.map {
         case (r, i) => org.apache.spark.sql.Row(i, r.getSeq[Double](1), r.getDouble(2))
       }: _*), centSchema)
 
-    (1 to lloydIters).foreach { _ =>
-      cents = lloydStep(cents, e).localCheckpoint() // truncate lineage between rounds
+    withCheckpoints { checkpoint =>
+      // checkpoint per round: truncate lineage between rounds
+      val cents = (1 to lloydIters).foldLeft(seed)((c, _) => checkpoint(lloydStep(c, e)))
+      // the two persisted outputs are independent of each other (assignTo
+      // consumes the in-memory cents, not the centroids files) — overlap
+      // them so the tiny centroid write's job+commit latency hides under
+      // the corpus-sized assignment pass (guide §2.6)
+      overlapped(cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")) {
+        assignTo(cents, e).write.mode(SaveMode.Overwrite)
+          .partitionBy("cid").parquet(s"$base/assignments")
+      }
     }
-
-    // the two persisted outputs are independent of each other (assignTo
-    // consumes the in-memory cents, not the centroids files) — overlap
-    // them so the tiny centroid write's job+commit latency hides under
-    // the corpus-sized assignment pass (guide §2.6)
-    val fCent = scala.concurrent.Future {
-      cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
-    }(IvfIndex.WriteEc)
-    assignTo(cents, e).write.mode(SaveMode.Overwrite)
-      .partitionBy("cid").parquet(s"$base/assignments")
-    scala.concurrent.Await.result(fCent, scala.concurrent.duration.Duration.Inf)
     new IvfIndex(base)
   }
 
@@ -464,57 +464,57 @@ object IvfIndex {
     val idx = build(spark, embeddings, base, cells, lloydIters)
     val assigned = spark.read.parquet(s"$base/assignments")
 
-    // ONE checkpointed (vec_id, cid, uq) relation feeds seed selection,
-    // every training round, AND the final encode write: previously the
-    // seed collect and the codes write each re-listed and re-scanned the
-    // assignments parquet (3 reads + their AQE sub-jobs per build — the
-    // r17 verdict's job-count item); vec_id/cid are 12 bytes next to the
-    // d-double uq, so carrying them through the checkpoint is free.
-    val uqDf = assigned.select(col("vec_id"), col("cid"), unitQ.as("uq"))
-      .localCheckpoint()
+    withCheckpoints { checkpoint =>
+      // ONE checkpointed (vec_id, cid, uq) relation feeds seed selection,
+      // every training round, AND the final encode write: previously the
+      // seed collect and the codes write each re-listed and re-scanned the
+      // assignments parquet (3 reads + their AQE sub-jobs per build — the
+      // r17 verdict's job-count item); vec_id/cid are 12 bytes next to the
+      // d-double uq, so carrying them through the checkpoint is free.
+      val uqDf = checkpoint(assigned.select(col("vec_id"), col("cid"), unitQ.as("uq")))
 
-    // init: the ks lowest vec_ids' quantized unit subvectors (driver-sized)
-    val seeds = uqDf.orderBy("vec_id").limit(ks)
-      .select(col("uq"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(seeds.length == ks, s"PQ codebook needs $ks seed vectors, corpus has ${seeds.length}")
-    val dim = seeds.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val ds = dim / m
-    var cb: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(mi => seeds.map(_.slice(mi * ds, (mi + 1) * ds)))
+      // init: the ks lowest vec_ids' quantized unit subvectors (driver-sized)
+      val seeds = uqDf.orderBy("vec_id").limit(ks)
+        .select(col("uq"))
+        .collect().map(_.getSeq[Double](0).toArray)
+      require(seeds.length == ks, s"PQ codebook needs $ks seed vectors, corpus has ${seeds.length}")
+      val dim = seeds.head.length
+      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+      val ds = dim / m
+      var cb: Array[Array[Array[Double]]] =
+        Array.tabulate(m)(mi => seeds.map(_.slice(mi * ds, (mi + 1) * ds)))
 
-    for (_ <- 1 to pqIters) {
-      // one pass: argmin codes for all M subspaces, then per-(m, code, dim)
-      // exact integer sums — M·Ks·ds cells to the driver, never data-sized
-      val cbCells = uqDf.select(codesOf(cb, col("uq")).as("codes"), col("uq"))
-        .select(posexplode(col("codes")).as(Seq("mi", "c")), col("uq"))
-        .select(col("mi"), col("c"),
-          posexplode(slice(col("uq"), col("mi") * ds + 1, lit(ds))).as(Seq("d", "x")))
-        .groupBy("mi", "c", "d")
-        .agg(sum("x").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cb.map(_.map(_.clone())) // empty cells keep their codeword
-      cbCells.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          math.floor(r.getDouble(3) / r.getLong(4))
+      for (_ <- 1 to pqIters) {
+        // one pass: argmin codes for all M subspaces, then per-(m, code, dim)
+        // exact integer sums — M·Ks·ds cells to the driver, never data-sized
+        val cbCells = uqDf.select(codesOf(cb, col("uq")).as("codes"), col("uq"))
+          .select(posexplode(col("codes")).as(Seq("mi", "c")), col("uq"))
+          .select(col("mi"), col("c"),
+            posexplode(slice(col("uq"), col("mi") * ds + 1, lit(ds))).as(Seq("d", "x")))
+          .groupBy("mi", "c", "d")
+          .agg(sum("x").as("s"), count(lit(1)).as("n"))
+          .collect()
+        val next = cb.map(_.map(_.clone())) // empty cells keep their codeword
+        cbCells.foreach { r =>
+          next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+            math.floor(r.getDouble(3) / r.getLong(4))
+        }
+        cb = next
       }
-      cb = next
-    }
 
-    import spark.implicits._
-    // codebooks (driver-sized) and codes (corpus-sized) writes are
-    // independent — overlap them (guide §2.6), then read the codebooks
-    // back once into the serving memo
-    val fCb = scala.concurrent.Future {
-      (for (mi <- 0 until m; c <- 0 until ks) yield (mi, c, cb(mi)(c).toSeq))
-        .toDF("m", "c", "cw").repartition(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
-    }(WriteEc)
-    uqDf.select(col("vec_id"), codesOf(cb, col("uq")).as("codes"), col("cid"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(s"$base/codes")
-    scala.concurrent.Await.result(fCb, scala.concurrent.duration.Duration.Inf)
-    freeCheckpoint(uqDf)
+      import spark.implicits._
+      // codebooks (driver-sized) and codes (corpus-sized) writes are
+      // independent — overlap them (guide §2.6), then read the codebooks
+      // back once into the serving memo
+      overlapped {
+        (for (mi <- 0 until m; c <- 0 until ks) yield (mi, c, cb(mi)(c).toSeq))
+          .toDF("m", "c", "cw").repartition(1)
+          .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
+      } {
+        uqDf.select(col("vec_id"), codesOf(cb, col("uq")).as("codes"), col("cid"))
+          .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(s"$base/codes")
+      }
+    }
     // the codebooks this instance just trained and wrote — serving through
     // the memo skips one read+collect job per query batch (disk stays the
     // source of truth: a LOADED index still reads it)
@@ -522,16 +522,29 @@ object IvfIndex {
     idx
   }
 
-  /** Release a localCheckpoint's executor blocks (`df.unpersist()` is a
-    * CacheManager no-op for checkpoints — the blocks live in the
-    * LogicalRDD leaf; same contract as Bpe.freeCheckpoint).
+  /** Run `body` with a checkpoint function; every checkpoint it took is
+    * freed when `body` ends (a build's intermediates die with its writes). */
+  private def withCheckpoints[A](body: (DataFrame => DataFrame) => A): A = {
+    val cks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => val ck = Materialize.checkpoint(df); cks += ck; ck }
+    finally cks.foreach(Materialize.free)
+  }
+
+  /** Run `side` on [[WriteEc]] alongside `main` and return only once both
+    * have finished, so a failing main write neither orphans the side write
+    * nor loses its error: throws main's failure (side's as suppressed), else
+    * side's.
     */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
+  private def overlapped(side: => Unit)(main: => Unit): Unit = {
+    val f = scala.concurrent.Future(side)(WriteEc)
+    def awaitSide(): Unit = scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+    try main catch {
+      case t: Throwable =>
+        try awaitSide() catch { case s: Throwable => t.addSuppressed(s) }
+        throw t
     }
+    awaitSide()
+  }
 
   /** Load the persisted codebooks as (codewords-by-c, m) per subspace —
     * bounded by M·Ks·ds doubles, never data-sized.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.Text
 import graft.sources.Tables
 
@@ -464,7 +465,7 @@ object CorpusQueries {
     s2: DataFrame, s3: DataFrame, contaminated: DataFrame, s4: DataFrame, s5: DataFrame)
 
   private def v10Stages(spark: SparkSession, dir: String): V10Stages = {
-    import DedupQueries.{MinhashFns, BandRows, ShingleDfCap, MersenneP, affineA, affineB, tracked}
+    import DedupQueries.{MinhashFns, BandRows, ShingleDfCap, MersenneP, affineA, affineB}
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
     val corpus = docs.unionByName(
       docs.where(col("doc_id") % 10 === 0)
@@ -475,8 +476,8 @@ object CorpusQueries {
         Window.partitionBy(md5(Text.normText(col("text")))).orderBy("doc_id")))
       .where(col("rn") === 1).drop("rn")
     // tokenize ONCE; shingles, LM bigrams, and decontamination grams all read this
-    val toks = tracked(s1
-      .select(col("doc_id"), col("source"), Text.tokens(col("text")).as("tk")).cache())
+    val toks = Materialize.cache(s1
+      .select(col("doc_id"), col("source"), Text.tokens(col("text")).as("tk")))
     // stage 2 — MinHash-LSH near-dedup over the exact-dedup survivors.
     // The boilerplate cap is RELATIVE (≥ 2% of the corpus, floor 100): a
     // fixed absolute cap is corpus-dependent — at the 100× probe a df=100
@@ -500,9 +501,9 @@ object CorpusQueries {
     // DF cap as ONE window pass over the exploded shingles (shuffle key
     // sh64 — fine-grained), not a groupBy + self-join re-running the
     // explode twice; same semantics, one lineage execution
-    val sh = tracked(sh0
+    val sh = Materialize.cache(sh0
       .withColumn("df", count(lit(1)).over(Window.partitionBy("sh64")))
-      .where(col("df") <= dfCap).select("doc_id", "sh64").cache())
+      .where(col("df") <= dfCap).select("doc_id", "sh64"))
     val hashed = sh
       .withColumn("h32", col("sh64").bitwiseAND(lit(0xFFFFFFFFL)))
       .select(col("doc_id") +: (0 until MinhashFns).map(j =>
@@ -555,14 +556,14 @@ object CorpusQueries {
     // join + verify; bigram explode; 8-gram explode + eval join) — v12
     // replays all three without these, and a battery run pays the chain
     // twice (v12 measured 6.1 s vs v10's 3.5 s before the caches)
-    val neardup = tracked(inter
+    val neardup = Materialize.cache(inter
       .join(sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("n", "na"), "da")
       .join(sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("n", "nb"), "db")
       .where(col("i") * lit(1.0) / (col("na") + col("nb") - col("i")) >= 0.5)
-      .select(col("db").as("doc_id")).distinct().cache())
+      .select(col("db").as("doc_id")).distinct())
     // persisted: the LM stage (tok2/big), the quality join (s3), and the
     // decontamination grams all read the deduped survivor relation
-    val s2 = tracked(toks.join(neardup, Seq("doc_id"), "left_anti").cache())
+    val s2 = Materialize.cache(toks.join(neardup, Seq("doc_id"), "left_anti"))
     // stage 3 — quality gate: token floor + t9 LM score ≥ 30M ppb/bigram
     val tok2 = s2.where(size(col("tk")) >= 2)
     val big = tok2.select(col("doc_id"),
@@ -575,7 +576,7 @@ object CorpusQueries {
     val refCtx = refBig.groupBy("w1").agg(sum("b").as("c"))
     val vocab = tok2.where(col("doc_id") % 3 === 0)
       .select(explode(col("tk")).as("w")).agg(countDistinct("w").as("v"))
-    val lm = tracked(big
+    val lm = Materialize.cache(big
       .join(refBig, Seq("w1", "w2"), "left")
       .join(refCtx, Seq("w1"), "left")
       .crossJoin(broadcast(vocab)) // 1-row scalar, benign
@@ -583,8 +584,7 @@ object CorpusQueries {
         floor(lit(1e9) * (coalesce(col("b"), lit(0L)) + lit(1L)) /
           (coalesce(col("c"), lit(0L)) + col("v"))).cast("long").as("ppb"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("ppb").as("score_ppb"))
-      .cache())
+      .agg(count(lit(1)).as("n_bigrams"), sum("ppb").as("score_ppb")))
     // RELATIVE LM gate: keep docs whose per-bigram average clears 90% of
     // the corpus-wide average. An absolute ppb floor is corpus-dependent —
     // add-one smoothing divides by (c + V), and V grows with the corpus,
@@ -607,8 +607,8 @@ object CorpusQueries {
     // benchmark set), never the raw crawl.
     val grams = s2.select(col("doc_id"), explode(Text.shingles(col("tk"), NGram)).as("gram"))
     val ev = grams.where(col("doc_id") % 11 === 0).select("gram").distinct()
-    val contaminated = tracked(grams.where(col("doc_id") % 11 =!= 0)
-      .join(ev, "gram").select("doc_id").distinct().cache())
+    val contaminated = Materialize.cache(grams.where(col("doc_id") % 11 =!= 0)
+      .join(ev, "gram").select("doc_id").distinct())
     val s4 = s3.where(col("doc_id") % 11 =!= 0)
       .join(contaminated, Seq("doc_id"), "left_anti")
     // stage 5 — temperature mix (α = 0.5 → √-flattened integer-ppm rates) + split.
@@ -624,12 +624,11 @@ object CorpusQueries {
         floor(lit(1000000.0) * sqrt(col("min_tokens") / col("src_tokens")))
           .cast("long").as("rate_ppm"))
     val bucket = pmod(Text.md5Long(col("doc_id").cast("string")), lit(100L))
-    val s5 = tracked(s4.join(broadcast(rates), Seq("source"))
+    val s5 = Materialize.cache(s4.join(broadcast(rates), Seq("source"))
       .where(pmod(Text.md5Long(concat(lit("v10:"), col("doc_id").cast("string"))),
         lit(1000000L)) < col("rate_ppm"))
       .withColumn("split_idx",
-        when(bucket < 80, 0).when(bucket < 90, 1).otherwise(2))
-      .cache())
+        when(bucket < 80, 0).when(bucket < 90, 1).otherwise(2)))
     V10Stages(corpus, s1, neardup, s2, s3, contaminated, s4, s5)
   }
 
@@ -848,11 +847,10 @@ object CorpusQueries {
     * value→bucket map.
     */
   def v13CcnetBuckets(spark: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.tracked
-    val scored = tracked(
+    val scored = Materialize.cache(
       TextQueries.t9Scores(spark, dir)
         .withColumn("avg_ppb", expr("score_ppb DIV n_bigrams"))
-        .select("doc_id", "avg_ppb").cache())
+        .select("doc_id", "avg_ppb"))
     val perV = scored.groupBy(col("avg_ppb").as("v")).agg(count(lit(1)).as("cnt"))
     // scored rows ARE the docs with ≥2 tokens (t9 filters size(tk) ≥ 2
     // before the bigram groupBy), mirroring the oracle's count over avgd

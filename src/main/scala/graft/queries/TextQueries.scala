@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.Text
 import graft.sources.Tables
 
@@ -493,8 +494,8 @@ object TextQueries {
   private[queries] def trainedWeights(spark: SparkSession, dir: String): Array[Long] =
     clsCache.computeIfAbsent(Tables.fitKey(spark, dir, "documents"), _ => {
       val (tfRaw, y) = clsFeatures(spark, dir)
-      val ck = tfRaw.join(y, "doc_id").localCheckpoint()
-      try runTraining(spark, ck, y.count()) finally freeLocalCheckpoint(ck)
+      val ck = Materialize.checkpoint(tfRaw.join(y, "doc_id"))
+      try runTraining(spark, ck, y.count()) finally Materialize.free(ck)
     })
 
   /** t19's weights: the SAME integer dynamics, trained only on the
@@ -509,36 +510,9 @@ object TextQueries {
     clsGoldCache.computeIfAbsent(Tables.fitKey(spark, dir, "documents"), _ => {
       val (tfRaw, y) = clsFeatures(spark, dir)
       val yt = y.where(col("doc_id") % 5 < 2)
-      val ck = tfRaw.join(yt, "doc_id").localCheckpoint()
-      try runTraining(spark, ck, yt.count()) finally freeLocalCheckpoint(ck)
+      val ck = Materialize.checkpoint(tfRaw.join(yt, "doc_id"))
+      try runTraining(spark, ck, yt.count()) finally Materialize.free(ck)
     })
-
-  /** Release the executor blocks pinned by a `localCheckpoint()`'d frame.
-    * `df.unpersist()` is a CacheManager lookup and a no-op for checkpoints
-    * (the blocks belong to the materialized RDD inside the frame's
-    * `LogicalRDD` leaf, not to a cached plan), so without this the two
-    * corpus-sized training feature relations stayed resident for the JVM
-    * lifetime — under the 182-query bench battery that residency pushed
-    * v10's recorded time to 3.2× its isolated cost. The frame is discarded
-    * after training (the weights array is the only live output), so losing
-    * recomputability is fine.
-    */
-  private def freeLocalCheckpoint(df: DataFrame): Unit = {
-    var freed = 0
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true); freed += 1
-      case _ => ()
-    }
-    // A checkpointed frame that exposes no LogicalRDD leaf means a Spark
-    // upgrade moved the class and the blocks would silently stay resident
-    // for the JVM lifetime (the exact 3.2× bench thrash this fixes) —
-    // surface the regression instead of reverting to the leak.
-    if (freed == 0)
-      System.err.println(
-        "WARN graft: freeLocalCheckpoint found no LogicalRDD leaf to unpersist — " +
-          "checkpoint blocks stay resident (plan: " + df.queryExecution.analyzed.nodeName + ")")
-  }
 
   /** The shared heavy-ball training loop over an already-labeled,
     * already-checkpointed feature relation (doc_id, bucket, c, y) with n

@@ -59,7 +59,7 @@ class ScaleProbeSpec extends AnyFunSuite {
   test("symlinked tables resolve and a dedup query runs on the scaled dir") {
     assert(Tables.customer(spark, out).count() == Tables.customer(spark, base).count())
     assert(queries.DedupQueries.d1ExactDedup(spark, out).count() > 0)
-    queries.DedupQueries.unpersistShared()
+    Materialize.releaseAll()
   }
 
   test("facts scale FK-consistently: every scaled lineitem still has its order") {
